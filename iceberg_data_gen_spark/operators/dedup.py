@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_data_gen_spark.memo import memo
 from iceberg_data_gen_spark.operators import QUERIES, register
 from iceberg_data_gen_spark.operators.common import docs_table as _docs
 from iceberg_data_gen_spark.operators.common import md5_hash32_sql, ngram_expr
@@ -64,17 +65,26 @@ DEDUP_LSH_ENV = "IDG_DEDUP_LSH"
 # a larger in-bucket clique before star-reducing — ≤ ~32k in-row pairs
 # per bucket, still linear in bucket count at any corpus size.
 DEDUP_CHAIN_BUCKET_CAP = 256
-# Corpus-PATH-keyed memos (the corpus at a path is immutable in-process;
-# scripts/probe_lsh_crossover.py pre-seeds _DOC_COUNT).  Deliberately NOT
-# the session-keyed similarity._TRAINED cache: these are plain values
-# derived from the files, valid across session cycles, and re-deriving
-# them per session would repeat full-corpus driver jobs.
-_DOC_COUNT: dict[str, int] = {}  # corpus path -> row count
-_JACCARD_PROBE: dict[str, tuple] = {}  # corpus path -> (use_bitmask, vocab)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+
+
+def _doc_count(spark: SparkSession, sf_dir: str) -> int:
+    """Documents in the corpus, memoized (review r10: the audit and the
+    branch choice each paid a fresh full-corpus count per call)."""
+    return memo(spark, "doc_count", (sf_dir,), lambda: _docs(spark, sf_dir).count())
+
+
+def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached MinHash signature table, one per (session, corpus)."""
+    return memo(
+        spark,
+        "minhash_sigs",
+        (sf_dir,),
+        lambda: minhash_signatures(_docs(spark, sf_dir)).cache(),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +198,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to a map-only validation scan (no shuffle — the old probe's
     # distinct() shuffled) that falls back to tokens if ANY document holds
     # a word outside the sampled map, so results stay oracle-exact.
-    if sf_dir not in _JACCARD_PROBE:
+    def _probe():
         vocab = [
             r.w
             for r in docs.select(F.explode(words).alias("w"))
@@ -214,11 +224,12 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .count()
             )
             use_bitmask = uncovered == 0
-        # memoized per corpus path (review r7): the probe runs 2-3 eager
-        # driver jobs at PLAN-BUILD time, and the cluster/survivor chain
-        # re-invokes this query on every call
-        _JACCARD_PROBE[sf_dir] = (use_bitmask, sorted(vocab))
-    use_bitmask, vocab = _JACCARD_PROBE[sf_dir]
+        return use_bitmask, sorted(vocab)
+
+    # memoized (review r7): the probe runs 2-3 eager driver jobs at
+    # PLAN-BUILD time, and the cluster/survivor chain re-invokes this
+    # query on every call
+    use_bitmask, vocab = memo(spark, "jaccard_probe", (sf_dir,), _probe)
 
     # r13 (guide §2.5): tokenization + the 16× partner replication used
     # to run inside the single-task scan stage of the one-row-group
@@ -439,18 +450,11 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every doc given 99 near-dup siblings — the adversarial case): 49×
     wall (uncapped clique self-join) → 2.3× for 100× rows.
     """
-    # ONE cached signature table per (session, corpus) via the shared
-    # session-bound cache (review r7): a per-call .cache() pinned a fresh
-    # corpus-sized copy in executor storage on every invocation (bench
-    # passes and monitor loops re-run this query) and never released any
-    from iceberg_data_gen_spark.operators.similarity import _trained_session
-
-    sigs = _trained_session(
-        "minhash_sigs",
-        spark,
-        (sf_dir,),
-        lambda: minhash_signatures(_docs(spark, sf_dir)).cache(),
-    )
+    # ONE cached signature table per (session, corpus) via the memo
+    # (review r7): a per-call .cache() pinned a fresh corpus-sized copy
+    # in executor storage on every invocation (bench passes and monitor
+    # loops re-run this query) and never released any
+    sigs = _minhash_sigs(spark, sf_dir)
     # The CANDIDATE-PAIR core is cached alongside the signatures (r14,
     # VERDICT r13 #1): banding + window + clique/star expansion +
     # distinct is the LSH index construction — a pure function of the
@@ -461,11 +465,8 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still computes per invocation from the signature table), the
     # first call in a session pays materialization, band/threshold
     # parameters are untouched.
-    cand = _trained_session(
-        "lsh_candidates",
-        spark,
-        (sf_dir,),
-        lambda: _lsh_candidates(sigs).cache(),
+    cand = memo(
+        spark, "lsh_candidates", (sf_dir,), lambda: _lsh_candidates(sigs).cache()
     )
 
     sa = sigs.alias("sa")
@@ -523,16 +524,8 @@ def q_minhash_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from iceberg_data_gen_spark.operators import QUERIES
-    from iceberg_data_gen_spark.operators.similarity import _trained_session
-
     pairs = QUERIES["q_minhash_lsh"](spark, sf_dir).cache()
-    sigs = _trained_session(
-        "minhash_sigs",
-        spark,
-        (sf_dir,),
-        lambda: minhash_signatures(_docs(spark, sf_dir)).cache(),
-    )
+    sigs = _minhash_sigs(spark, sf_dir)
     buckets = _band_buckets(sigs)
 
     # pairs_banded: in-row band-set intersection (≤ LSH_BANDS per side);
@@ -609,9 +602,7 @@ def q_minhash_lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
     ).count()
 
-    if sf_dir not in _DOC_COUNT:  # path-keyed memo (review r10: the
-        _DOC_COUNT[sf_dir] = _docs(spark, sf_dir).count()  # audit paid a
-    n_docs = _DOC_COUNT[sf_dir]  # fresh full-corpus count per call
+    n_docs = _doc_count(spark, sf_dir)
     pairs.unpersist()
     # pairs_banded is vacuously TRUE on a zero-pair corpus (matching the
     # oracle's unconditional TRUE); star_connected independently fails a
@@ -1061,18 +1052,14 @@ def _dedup_branch(spark: SparkSession, sf_dir: str) -> str:
     the label memo must be keyed by the branch actually taken: the test
     suite flips the env var within one session and the two branches'
     label sets may legitimately differ (LSH recall < 1 can split
-    borderline clusters).  The doc count is memoized per corpus path
-    (a plain int, session-independent — the corpus at a path is
-    immutable in-process); under a forced LSH path the count is
-    irrelevant and is short-circuited BEFORE paying the scan (ADVICE
-    r6)."""
+    borderline clusters).  The doc count is memoized (``_doc_count``);
+    under a forced LSH path the count is irrelevant and is
+    short-circuited BEFORE paying the scan (ADVICE r6)."""
     import os
 
     if os.environ.get(DEDUP_LSH_ENV) == "1":
         return "lsh"
-    if sf_dir not in _DOC_COUNT:
-        _DOC_COUNT[sf_dir] = _docs(spark, sf_dir).count()
-    return "exact" if _DOC_COUNT[sf_dir] <= DEDUP_LSH_MIN_DOCS else "lsh"
+    return "exact" if _doc_count(spark, sf_dir) <= DEDUP_LSH_MIN_DOCS else "lsh"
 
 
 _CLUSTER_EDGE_SQL = """
@@ -1165,14 +1152,9 @@ def _dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip between calls in one session and the two branches' label sets
     legitimately differ.  The labels themselves are tiny (dup-graph
     nodes only: bounded by the pair list, a sliver of the corpus)."""
-    from iceberg_data_gen_spark.operators.similarity import _trained_session
-
     branch = _dedup_branch(spark, sf_dir)
-    return _trained_session(
-        "dup_labels",
-        spark,
-        (sf_dir, branch),
-        lambda: _dup_labels_build(spark, sf_dir),
+    return memo(
+        spark, "dup_labels", (sf_dir, branch), lambda: _dup_labels_build(spark, sf_dir)
     )
 
 

@@ -29,12 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iceberg_data_gen_spark.memo import memo
 from iceberg_data_gen_spark.operators import register
 from iceberg_data_gen_spark.operators.common import doc_order_key, ttr_expr
 from iceberg_data_gen_spark.operators.common import docs_table as _docs
-
-
-_CURRICULUM_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _shard_of(h: F.Column) -> F.Column:
@@ -275,22 +273,20 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n_parts = 16  # e.g. "auto" under some AQE configs
-    app_id = spark.sparkContext.applicationId
-    key = ("curriculum_rp", app_id, sf_dir, n_parts)
-    if key not in _CURRICULUM_CACHE:
-        # Dropping the dict entry is the WHOLE eviction (ADVICE r10):
-        # localCheckpoint blocks are not registered with the CacheManager,
-        # so DataFrame.unpersist() on them is a no-op — release happens
-        # when the checkpointed RDD is garbage-collected and the
-        # ContextCleaner reclaims its blocks, which this del enables.
-        for stale in [k for k in _CURRICULUM_CACHE if k != key]:
-            del _CURRICULUM_CACHE[stale]
-        rp = d.repartitionByRange(
-            n_parts, F.desc("ttr"), F.asc("doc_id")
-        ).withColumn("pid", F.spark_partition_id())
-        # pin partitioning: pid must be stable across the count + window
-        _CURRICULUM_CACHE[key] = rp.localCheckpoint(eager=True)
-    rp = _CURRICULUM_CACHE[key]
+    # Dropping the memo entry is the WHOLE eviction (ADVICE r10):
+    # localCheckpoint blocks are not registered with the CacheManager, so
+    # the memo's unpersist skips them — release happens when the
+    # checkpointed RDD is garbage-collected and the ContextCleaner
+    # reclaims its blocks.  localCheckpoint pins the partitioning: pid
+    # must be stable across the count + window.
+    rp = memo(
+        spark,
+        "curriculum_rp",
+        (sf_dir, n_parts),
+        lambda: d.repartitionByRange(n_parts, F.desc("ttr"), F.asc("doc_id"))
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint(eager=True),
+    )
     # partition sizes -> exclusive prefix offsets (n_parts rows on the driver)
     sizes = {r["pid"]: r["cnt"] for r in rp.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, acc = {}, 0

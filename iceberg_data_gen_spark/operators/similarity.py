@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from iceberg_data_gen_spark.memo import memo
 from iceberg_data_gen_spark.operators import register
 
 # ONE home for the sequential-dot / unit-normalize helpers: the
@@ -53,6 +54,19 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session owner added the repo to sys.path at runtime (the driver's
 # vanilla-session contract).  That is why the per-batch normalize /
 # PQ-encode blocks are repeated inside each kernel body.
+
+
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, v)`` over the vector-bearing corpus: the one input the
+    trained quantizers and the ``emb_count`` memo derive from.  NULL
+    embeddings/ids drop out (NULL sweep r11): a NULL v crashes the numpy
+    batch kernels, a NULL vec_id NaN-poisons their int64 id arrays;
+    matches normalized_vectors' filter and the oracles' WHERE."""
+    return (
+        _emb(spark, sf_dir)
+        .where(vec_complete() & F.col("vec_id").isNotNull())
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    )
 
 
 def _query_matrix(e: DataFrame, n_queries: int):
@@ -94,7 +108,7 @@ def _norm_query_matrix(en: DataFrame, n_queries: int):
 def _ann_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The brute-force top-{TOP_K} truth set (``query_id, neighbor_id``
     — K·|queries| rows), cached and materialized ONCE per (session,
-    corpus) via the shared session cache.  ONE definition (review r9:
+    corpus) via the memo.  ONE definition (review r9:
     q_ann_recall and the recall-floor witnesses each built the same
     'ann_ground_truth' cache entry from their own 8-line closure, so a
     projection change in one site would silently redefine the schema
@@ -110,7 +124,7 @@ def _ann_ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.count()  # materialize now: K·|queries| rows, trivially small
         return df
 
-    return _trained_session("ann_ground_truth", spark, (sf_dir,), _truth)
+    return memo(spark, "ann_ground_truth", (sf_dir,), _truth)
 
 
 def _norm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,11 +134,11 @@ def _norm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocations (bench loops, recall monitors, the floor witnesses)
     should pay it once per corpus snapshot, exactly like the trained
     quantizers and the brute-force ground truth already do.  Storage is
-    one corpus-sized MEMORY_AND_DISK entry per session, released with
-    the session (``_trained_session`` evicts dead-session keys)."""
-    return _trained_session(
-        "ann_norm_corpus",
+    one corpus-sized MEMORY_AND_DISK entry per session, released by the
+    memo's eviction."""
+    return memo(
         spark,
+        "ann_norm_corpus",
         (sf_dir,),
         lambda: normalized_vectors(_emb(spark, sf_dir)).cache(),
     )
@@ -387,39 +401,6 @@ def _ivf_nprobe(k: int) -> int:
     probe cost linear in k again)."""
     return max(IVF_NPROBE, int(round(k**0.5)))
 
-# Trained-model cache: at scale you train the IVF centroids / PQ
-# codebooks ONCE per corpus version and reuse them for every query
-# batch — retraining per invocation would re-scan the corpus
-# iters times for no reason.  Keyed by (kind, corpus path, params);
-# within one process the corpus at a path is immutable, which is
-# exactly the Iceberg-snapshot contract this repo's tables follow.
-_TRAINED: dict[tuple, object] = {}
-
-
-def _trained(key: tuple, train):
-    if key not in _TRAINED:
-        _TRAINED[key] = train()
-    return _TRAINED[key]
-
-
-def _trained_session(kind: str, spark, extra: tuple, train):
-    """Like ``_trained`` but for SESSION-BOUND values (live DataFrames),
-    keyed ``(kind, applicationId, *extra)``.  On insert, evicts every
-    entry of the same *kind* whose applicationId differs from the current
-    one: a DataFrame cached under a stopped SparkSession is dead weight,
-    and a process that cycles sessions would otherwise grow this dict and
-    retain the dead sessions' object graphs forever (ADVICE r6)."""
-    app_id = spark.sparkContext.applicationId
-    key = (kind, app_id, *extra)
-    if key not in _TRAINED:
-        for stale in [
-            k for k in _TRAINED if k[0] == kind and len(k) > 1 and k[1] != app_id
-        ]:
-            del _TRAINED[stale]
-        _TRAINED[key] = train()
-    return _TRAINED[key]
-
-
 def _flat_quantizer(C):
     """Closure-based single-level quantizer over centroid matrix ``C``.
 
@@ -524,28 +505,28 @@ def _corpus_centroids(e: DataFrame, sf_dir: str):
     import math
     import os
 
-    n = _trained(("count", sf_dir), e.count)
+    spark = e.sparkSession
+    n = memo(spark, "emb_count", (sf_dir,), e.count)
     want = _ivf_want(n)
     forced = os.environ.get(IVF_TWO_LEVEL_ENV) == "1"
     if want <= IVF_MAX_CENTROIDS and not forced:
         k = _ivf_k(n)
-        C = _trained(
-            ("ivf", sf_dir, k, IVF_KMEANS_ITERS),
-            lambda: _kmeans_centroids(e, k),
-        )
+        key = (sf_dir, k, IVF_KMEANS_ITERS)
+        C = memo(spark, "ivf", key, lambda: _kmeans_centroids(e, k))
         return _flat_quantizer(C)
     # two-level: each half-codebook holds ~sqrt(k_wanted) centroids (floor
     # 4 so forced tiny-corpus runs keep the recall-asserted 16-cell
     # geometry; cap 65536 per half = the same 33 MB broadcast bound)
     k1 = min(IVF_MAX_CENTROIDS, max(4, math.ceil(math.sqrt(want))))
     h = DIM // 2
-    C1 = _trained(
-        ("imi1", sf_dir, k1, IVF_KMEANS_ITERS),
-        lambda: _kmeans_centroids(e, k1, lo=0, hi=h),
-    )
-    C2 = _trained(
-        ("imi2", sf_dir, k1, IVF_KMEANS_ITERS),
-        lambda: _kmeans_centroids(e, k1, lo=h, hi=DIM),
+    C1, C2 = memo(
+        spark,
+        "imi",
+        (sf_dir, k1, IVF_KMEANS_ITERS),
+        lambda: (
+            _kmeans_centroids(e, k1, lo=0, hi=h),
+            _kmeans_centroids(e, k1, lo=h, hi=DIM),
+        ),
     )
     return _imi_quantizer(C1, C2)
 
@@ -668,15 +649,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from typing import Iterator
 
-    e = (
-        _emb(spark, sf_dir)
-        # NULL embeddings/ids drop out (NULL sweep r11): a NULL v
-        # crashes the numpy batch kernels, a NULL vec_id NaN-poisons
-        # their int64 id arrays; matches normalized_vectors' filter and
-        # the oracles' WHERE
-        .where(vec_complete() & F.col("vec_id").isNotNull())
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
+    e = _vectors(spark, sf_dir)
     assign, probe, k = _corpus_centroids(e, sf_dir)
     # query head off the CACHED normalized corpus (r11 wave 5): the
     # raw-scan _query_matrix re-read parquet + re-normalized per
@@ -822,20 +795,17 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is deterministic arithmetic (no RNG), so the full result
     is oracle-checked against DuckDB computing the same planes.
     """
-    # ONE cached bucketed corpus per (corpus, process) via the shared
-    # train-once cache: a per-call .cache() would pin a fresh corpus-sized
-    # copy in executor storage memory on every invocation (q_ann_recall
-    # re-invokes this query) and never release any of them
-    # keyed on applicationId as well (unlike the numpy-valued entries,
-    # this one holds a LIVE DataFrame, which dies with its SparkSession) —
-    # _trained_session evicts entries left by stopped sessions on insert
-    # derived from the shared normalized base (VERDICT r8 #3): when the
-    # brute-force/kNN family already materialized _norm_corpus, the
-    # bucketed build reads cached nv instead of re-scanning parquet and
-    # re-running the normalization fold
-    bucketed = _trained_session(
-        "lsh_bucketed",
+    # ONE cached bucketed corpus per (session, corpus) via the memo: a
+    # per-call .cache() would pin a fresh corpus-sized copy in executor
+    # storage memory on every invocation (q_ann_recall re-invokes this
+    # query) and never release any of them.  Derived from the shared
+    # normalized base (VERDICT r8 #3): when the brute-force/kNN family
+    # already materialized _norm_corpus, the bucketed build reads cached
+    # nv instead of re-scanning parquet and re-running the normalization
+    # fold
+    bucketed = memo(
         spark,
+        "lsh_bucketed",
         (sf_dir,),
         lambda: _norm_corpus(spark, sf_dir)
         .select("vec_id", "nv")
@@ -1088,6 +1058,12 @@ def _pq_codebooks(e: DataFrame):
     return C
 
 
+def _pq_model(e: DataFrame, sf_dir: str):
+    """``_pq_codebooks(e)``, trained once per (session, corpus)."""
+    key = (sf_dir, PQ_SUBSPACES, PQ_CODES, PQ_ITERS)
+    return memo(e.sparkSession, "pq", key, lambda: _pq_codebooks(e))
+
+
 @register("q_ann_pq")  # trained quantizer: rows-only check
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-{K} via PRODUCT QUANTIZATION with asymmetric
@@ -1108,19 +1084,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from typing import Iterator
 
-    e = (
-        _emb(spark, sf_dir)
-        # NULL embeddings/ids drop out (NULL sweep r11): a NULL v
-        # crashes the numpy batch kernels, a NULL vec_id NaN-poisons
-        # their int64 id arrays; matches normalized_vectors' filter and
-        # the oracles' WHERE
-        .where(vec_complete() & F.col("vec_id").isNotNull())
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
-    C = _trained(
-        ("pq", sf_dir, PQ_SUBSPACES, PQ_CODES, PQ_ITERS),
-        lambda: _pq_codebooks(e),
-    )  # (subspaces, codes, d)
+    e = _vectors(spark, sf_dir)
+    C = _pq_model(e, sf_dir)  # (subspaces, codes, d)
     d = C.shape[2]
     # query head off the CACHED normalized corpus (r11 wave 5): the
     # raw-scan _query_matrix re-read parquet + re-normalized per
@@ -1385,7 +1350,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed cell, PQ-encode and ADC-score them against exactly the
     queries probing that cell (per-cell fancy indexing — no per-pair
     Python loop, no second scan, no join).  Both trained models come
-    from the shared ``_trained`` cache: train once per corpus snapshot,
+    from the memo: train once per (session, corpus),
     reuse for every query batch.  Recall@{TOP_K} vs q_ann_bruteforce is
     floor-asserted in tests/test_llm_ops.py (measured 0.40 mean at
     sf0.01 on the near-uniform synthetic embeddings — consistent with
@@ -1399,20 +1364,9 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from typing import Iterator
 
-    e = (
-        _emb(spark, sf_dir)
-        # NULL embeddings/ids drop out (NULL sweep r11): a NULL v
-        # crashes the numpy batch kernels, a NULL vec_id NaN-poisons
-        # their int64 id arrays; matches normalized_vectors' filter and
-        # the oracles' WHERE
-        .where(vec_complete() & F.col("vec_id").isNotNull())
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
+    e = _vectors(spark, sf_dir)
     assign, probe, k = _corpus_centroids(e, sf_dir)
-    B = _trained(
-        ("pq", sf_dir, PQ_SUBSPACES, PQ_CODES, PQ_ITERS),
-        lambda: _pq_codebooks(e),
-    )  # (subspaces, codes, d)
+    B = _pq_model(e, sf_dir)  # (subspaces, codes, d)
     d = B.shape[2]
     # query head off the CACHED normalized corpus (r11 wave 5): the
     # raw-scan _query_matrix re-read parquet + re-normalized per
@@ -1507,8 +1461,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexical MinHash/SimHash family: it removes paraphrases and
     re-renderings that share no n-grams.
 
-    Plan: centroids come from the ``_trained`` cache (train once per
-    corpus snapshot, shared with IVF); ONE Arrow pass assigns cells;
+    Plan: centroids come from the memo (train once per (session,
+    corpus), shared with IVF); ONE Arrow pass assigns cells;
     one ``applyInPandas`` per cluster runs the greedy scan as numpy
     matrix ops (each candidate row scored against the KEPT matrix in a
     vectorized sweep — never all-pairs across clusters).  At 100 TB the
@@ -1525,15 +1479,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = (
-        _emb(spark, sf_dir)
-        # NULL embeddings/ids drop out (NULL sweep r11): a NULL v
-        # crashes the numpy batch kernels, a NULL vec_id NaN-poisons
-        # their int64 id arrays; matches normalized_vectors' filter and
-        # the oracles' WHERE
-        .where(vec_complete() & F.col("vec_id").isNotNull())
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
+    e = _vectors(spark, sf_dir)
     cell_of, _probe, _k = _corpus_centroids(e, sf_dir)
 
     def assign(batches):
@@ -1752,19 +1698,13 @@ def q_semdedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("kept").alias("e_kept"),
     )
     joined = v.join(ev, v["evidence_id"] == ev["e_id"], "left")
-    # path-keyed memo (review r10): the q_semdedup call above already
-    # populated ("count", sf_dir) via _corpus_centroids — an uncached
-    # second full-table count job per audit invocation is pure waste
-    # the shared ("count", sf_dir) memo counts the VECTOR-BEARING corpus
-    # (NULL embeddings are outside the semdedup universe — r11), matching
-    # _corpus_centroids' count over the filtered frame and the oracle's
+    # memoized (review r10): the q_semdedup call above already populated
+    # the emb_count entry via _corpus_centroids — an uncached second
+    # full-table count job per audit invocation is pure waste.  Both
+    # builders count _vectors, the VECTOR-BEARING corpus (NULL embeddings
+    # are outside the semdedup universe — r11), matching the oracle's
     # WHERE embedding IS NOT NULL
-    n_total = _trained(
-        ("count", sf_dir),
-        lambda: _emb(spark, sf_dir)
-        .where(vec_complete() & F.col("vec_id").isNotNull())
-        .count(),
-    )
+    n_total = memo(spark, "emb_count", (sf_dir,), _vectors(spark, sf_dir).count)
     try:
         agg = joined.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1800,7 +1740,7 @@ def q_semdedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # collect otherwise leaks the cached verdict set, and a
         # retrying caller (driver rounds, the sweep's keep-sweeping
         # except) accumulates corpus-sized storage entries — the
-        # _PR_EDGE_CACHE leak class
+        # per-call .cache() leak class
         v.unpersist()
     return spark.createDataFrame(
         [

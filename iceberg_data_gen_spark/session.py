@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+from iceberg_data_gen_spark.memo import memo
+
+
 def _external_master() -> bool:
     """True when a launcher outside this process owns the master setting
     (spark-submit's gateway env, or an explicit SPARK_MASTER opt-out)."""
@@ -101,26 +104,6 @@ TABLES = (
 )
 
 
-# (applicationId, id(session), sf_dir, name) -> loaded DataFrame.  A
-# DataFrame is a PLAN, not data: memoizing the handle skips the
-# per-invocation driver work of re-resolving the source and re-reading
-# the parquet footer (~0.1-0.3s per table per call — r13 measured; a
-# query touching six tables paid ~0.8s of pure plan-building per bench
-# pass), while every EXECUTION still scans the parquet files.  The
-# corpus at a path is immutable in-process (repo-wide cache contract);
-# note the memo also freezes the table's parquet FILE LISTING at first
-# load, which that same contract makes safe.  The key carries the
-# applicationId so a DataFrame never outlives its SparkContext, AND
-# id(session) (ADVICE r13) because a DataFrame is bound to the
-# SparkSession that built it: two sessions sharing one context
-# (newSession/cloneSession) share an applicationId but may resolve the
-# source under different confs.  The events table is excluded: its
-# loader sniffs the physical layout and conditions a session conf
-# (nanosAsLong) that streaming runners restore afterwards, so its plan
-# must be rebuilt under the conf state of each call.
-_TABLE_CACHE: dict[tuple, "object"] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Load one driver-testdata parquet table as a DataFrame.
 
@@ -131,6 +114,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     are normalized to session-zone TimestampType at microsecond precision —
     the same value DuckDB produces — so every downstream query and oracle
     comparison sees one canonical type regardless of the file layout.
+
+    Every table but ``events`` is memoized (kind ``table``).  A DataFrame
+    is a PLAN, not data: the memo skips re-resolving the source and
+    re-reading the parquet footer (~0.1-0.3s per table per call, r13),
+    while every execution still scans the files; it also freezes the
+    file listing at first load, which the immutable-corpus contract
+    makes safe.  ``events`` is rebuilt per call because its loader
+    conditions a session conf (nanosAsLong) that streaming runners
+    restore afterwards, so its plan must follow each call's conf state.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -152,10 +144,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
         return normalize_events_ts(
             df, isinstance(df.schema["ts"].dataType, LongType)
         )
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = spark.read.parquet(path)
-    return _TABLE_CACHE[key]
+    return memo(spark, "table", (sf_dir, name), lambda: spark.read.parquet(path))
 
 
 def load_tables(

@@ -81,6 +81,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from iceberg_data_gen_spark.memo import memo
     from iceberg_data_gen_spark.operators import dedup
 
     spark = (
@@ -98,7 +99,7 @@ def main() -> int:
         # startup cost doesn't land on the first timed size
         warm = Path(td) / "warmup"
         make_corpus(warm, 300)
-        dedup._DOC_COUNT[str(warm)] = 300
+        memo(spark, "doc_count", (str(warm),), lambda: 300)
         saved = dedup.DEDUP_LSH_MIN_DOCS
         dedup.DEDUP_LSH_MIN_DOCS = 10**12
         dedup._dup_edges(spark, str(warm)).count()
@@ -113,7 +114,7 @@ def main() -> int:
             sf_dir = str(d)
 
             os.environ.pop(dedup.DEDUP_LSH_ENV, None)
-            dedup._DOC_COUNT[sf_dir] = n  # pre-seed so the count scan
+            memo(spark, "doc_count", (sf_dir,), lambda: n)  # pre-seed so the count scan
             # doesn't pollute the exact-branch timing; force exact by
             # lifting the threshold for this invocation
             saved = dedup.DEDUP_LSH_MIN_DOCS

@@ -23,3 +23,11 @@ def spark():
     s = get_spark("tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def memoized(spark, kind: str, key: tuple):
+    """The memo entry for ``(spark, kind, key)``; fails the test when
+    there is none (the build passed to ``memo`` never succeeds)."""
+    from iceberg_data_gen_spark.memo import memo
+
+    return memo(spark, kind, key, lambda: pytest.fail(f"no memo entry {kind} {key}"))

@@ -10,7 +10,7 @@ from iceberg_data_gen_spark import operators
 
 operators.load_all()
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, memoized
 
 
 def test_minhash_estimates_track_exact_shingle_jaccard(spark):
@@ -991,35 +991,31 @@ def test_asof_join_matched_row_travels_whole(spark):
 
 
 def test_session_cache_evicts_stopped_sessions():
-    """_TRAINED / _PR_EDGE_CACHE entries keyed on a stopped session's
-    applicationId must be evicted when a new session inserts (ADVICE r6:
-    unbounded dict growth + retention of dead DataFrame object graphs in
-    processes that cycle sessions)."""
+    """Memo entries keyed on a stopped session's applicationId must be
+    evicted when a new session inserts (ADVICE r6: unbounded dict growth
+    + retention of dead DataFrame object graphs in processes that cycle
+    sessions)."""
     from types import SimpleNamespace
 
-    from iceberg_data_gen_spark.operators import similarity as sim
+    from iceberg_data_gen_spark.memo import memo
 
     def fake(app_id):
         return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
-    snapshot = dict(sim._TRAINED)
-    try:
-        sim._TRAINED.clear()
-        v1 = sim._trained_session("kind_x", fake("app-1"), ("p",), lambda: "one")
-        assert v1 == "one"
-        # same session + key -> cached, no retrain
-        assert sim._trained_session("kind_x", fake("app-1"), ("p",), lambda: "BAD") == "one"
-        # new session inserting the same kind evicts the dead session's entry
-        v2 = sim._trained_session("kind_x", fake("app-2"), ("p",), lambda: "two")
-        assert v2 == "two"
-        assert ("kind_x", "app-1", "p") not in sim._TRAINED
-        # non-session-keyed entries (plain _trained) are untouched by eviction
-        sim._trained(("numpy_thing", 42), lambda: "keep")
-        sim._trained_session("kind_x", fake("app-3"), ("p",), lambda: "three")
-        assert sim._TRAINED[("numpy_thing", 42)] == "keep"
-    finally:
-        sim._TRAINED.clear()
-        sim._TRAINED.update(snapshot)
+    s1, s2, s3 = fake("app-1"), fake("app-2"), fake("app-3")
+    v1 = memo(s1, "kind_x", ("p",), lambda: "one")
+    assert v1 == "one"
+    # same session + key -> cached, no retrain
+    assert memo(s1, "kind_x", ("p",), lambda: "BAD") == "one"
+    # new session inserting the same kind evicts the dead session's entry
+    v2 = memo(s2, "kind_x", ("p",), lambda: "two")
+    assert v2 == "two"
+    assert memo(s1, "kind_x", ("p",), lambda: "evicted") == "evicted"
+    # a live session's entries of another kind are untouched by a
+    # same-context insert
+    memo(s3, "numpy_thing", (42,), lambda: "keep")
+    memo(s3, "kind_x", ("p",), lambda: "three")
+    assert memo(s3, "numpy_thing", (42,), lambda: "BAD") == "keep"
 
 
 def test_zero_norm_embedding_does_not_poison_neardup(spark, tmp_path):
@@ -1273,27 +1269,26 @@ def test_norm_corpus_cached_and_reused_across_ann_invocations(spark):
     """VERDICT r8 #3: the unit-normalization pass (itself sequential-fold
     work) must run once per (session, corpus) — the second invocation of
     q_ann_bruteforce / q_knn_classify has to reuse the SAME cached
-    normalized frame through the _trained_session seam, and its executed
+    normalized frame through the memo seam, and its executed
     plan must scan the in-memory relation, not re-derive nv."""
-    from iceberg_data_gen_spark.operators import similarity as sim
+    from iceberg_data_gen_spark.memo import stats
 
-    app_id = spark.sparkContext.applicationId
-    key = ("ann_norm_corpus", app_id, SF_DIR)
-    sim._TRAINED.pop(key, None)
+    key = (SF_DIR,)
 
     operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR).collect()
-    assert key in sim._TRAINED
-    first = sim._TRAINED[key]
+    first = memoized(spark, "ann_norm_corpus", key)
+    builds = stats()["ann_norm_corpus"]["misses"]
 
     df2 = operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR)
     df2.collect()
-    assert sim._TRAINED[key] is first  # no retrain, no re-cache
+    assert memoized(spark, "ann_norm_corpus", key) is first  # no retrain, no re-cache
     plan = df2._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan[:2000]
 
     # kNN shares the same entry (and adds none of its own)
     operators.QUERIES["q_knn_classify"](spark, SF_DIR).collect()
-    assert sim._TRAINED[key] is first
+    assert memoized(spark, "ann_norm_corpus", key) is first
+    assert stats()["ann_norm_corpus"]["misses"] == builds
 
 
 def test_contamination_detects_planted_overlap(spark, tmp_path):

@@ -38,21 +38,16 @@ def test_spread_scan_noop_on_already_parallel_input(spark):
     spread_scan must be a NO-OP (no extra exchange survives to 100 TB).
     Simulated by a pre-spread DataFrame: the probe sees the parallel
     partitioning and returns the input plan unchanged."""
-    from iceberg_data_gen_spark.operators import common
+    from iceberg_data_gen_spark.memo import memo
 
     par = spark.sparkContext.defaultParallelism
     df = load_table(spark, SF_DIR, "documents").repartition(par, "doc_id")
-    key = (spark.sparkContext.applicationId, SF_DIR, "documents")
-    old = common._SCAN_PARTS.get(key)
-    common._SCAN_PARTS[key] = par  # healthy-layout probe result
-    try:
-        out = spread_scan(df, SF_DIR, "documents", "doc_id")
-        assert out is df  # identical plan object — zero added nodes
-    finally:
-        if old is None:
-            del common._SCAN_PARTS[key]
-        else:
-            common._SCAN_PARTS[key] = old
+    # healthy-layout probe result, seeded under a corpus path of its own
+    # so no real corpus is ever served a fake split count
+    healthy = "<healthy-layout>"
+    memo(spark, "scan_parts", (healthy, "documents"), lambda: par)
+    out = spread_scan(df, healthy, "documents", "doc_id")
+    assert out is df  # identical plan object — zero added nodes
 
 
 def test_table_handle_memo_returns_same_plan_not_same_data(spark):
