@@ -21,16 +21,23 @@ Scale design
   the read path adds no extra shuffle of the data side.
 * Iceberg sequence-number semantics are honored: an equality delete
   applies only to rows from data files committed strictly before it.
+* Which delete files touch which data files is decided at planning time
+  from file-level metadata (sequence numbers and footer bounds), like
+  Iceberg's delete-file index; the per-row sequence predicate remains
+  only where metadata cannot decide it (``MoRTable._plan``).
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
+import re
 import shutil
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,27 +109,21 @@ def _canon_path(p: str) -> str:
     return p
 
 
-def _footer_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _data_file_entry(path: str) -> dict:
-    """Manifest entry for a committed data file — record count and
-    per-column stats from ONE footer read (review r7: the commit sites
-    called _footer_row_count + _footer_stats back to back, constructing
-    two ParquetFile objects and doubling the driver-side metadata pass
-    on many-file commits)."""
+def _file_entry(path: str, kind: str = "data", **extra) -> dict:
+    """Manifest entry for a committed file of any kind — record count and
+    per-column bounds from ONE footer read.  Delete files carry bounds
+    too: the scan planner matches them to data files the way Iceberg's
+    delete-file index does (``MoRTable._plan``).  An equality-delete
+    entry also lists the columns its footer proves NULL-free, because an
+    equality delete matches NULL to NULL and bounds say nothing about
+    NULLs."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    return {
-        "path": path,
-        "kind": "data",
-        "record_count": md.num_rows,
-        "stats": _stats_of(md),
-    }
+    entry = {"path": path, "kind": kind, "record_count": md.num_rows, "stats": _stats_of(md)}
+    if kind == "eq-delete":
+        entry["null_free"] = _null_free_of(md)
+    return {**entry, **extra}
 
 
 def _hive_pval(v) -> str | None:
@@ -188,6 +189,95 @@ def _stats_of(md) -> dict[str, list]:
     for name in invalid:
         stats.pop(name, None)
     return stats
+
+
+def _null_free_of(md) -> list[str]:
+    """Columns whose null count is known to be 0 in every row group."""
+    cols: dict[str, bool] = {}
+    for rg in range(md.num_row_groups):
+        row = md.row_group(rg)
+        for ci in range(row.num_columns):
+            col = row.column(ci)
+            st = col.statistics
+            known = st is not None and st.has_null_count and st.null_count == 0
+            cols[col.path_in_schema] = cols.get(col.path_in_schema, True) and known
+    return sorted(c for c, free in cols.items() if free)
+
+
+def _decides(bounds: list | None) -> bool:
+    """Can these [min, max] bounds rule a key value out?  Float bounds
+    never do: footer min/max may leave NaN out, and Spark's equality
+    matches NaN to NaN."""
+    return bounds is not None and not any(isinstance(v, float) for v in bounds)
+
+
+def _key_bounds_index(data: list[dict], key_cols: list[str]) -> dict:
+    """Per key column, the bounds of ``data`` as arrays: ``(known, min,
+    max)``, where ``known`` marks the files whose bounds decide.  Built
+    once per scan, so matching a delete file against every data file is
+    a few array comparisons instead of a Python loop."""
+    import numpy as np
+
+    index = {}
+    for c in key_cols:
+        bounds = [(d.get("stats") or {}).get(c) for d in data]
+        known = [_decides(b) for b in bounds]
+        fill = next((b for b, k in zip(bounds, known) if k), None)
+        if fill is None:
+            continue
+        bounds = [b if k else fill for b, k in zip(bounds, known)]
+        index[c] = (
+            np.array(known, dtype=bool),
+            np.array([b[0] for b in bounds]),
+            np.array([b[1] for b in bounds]),
+        )
+    return index
+
+
+def _eq_may_match(eq: dict, index: dict, n: int):
+    """Per data file of ``index`` (``n`` files): may equality-delete file
+    ``eq`` match one of its rows?  A key column rules a data file out
+    when both bounds decide and are disjoint, but only where ``eq`` is
+    NULL-free on it (a NULL key matches the data file's NULLs whatever
+    the bounds).  Missing stats ⇒ may match."""
+    import numpy as np
+
+    es = eq.get("stats") or {}
+    free = set(eq.get("null_free") or ())
+    hits = np.ones(n, dtype=bool)
+    for c, (known, mn, mx) in index.items():
+        if c in free and _decides(es.get(c)):
+            lo, hi = es[c]
+            hits &= ~known | ((mn <= hi) & (mx >= lo))
+    return hits
+
+
+# a path Spark's ``_metadata.file_path`` renders verbatim (after the
+# ``file:`` scheme): characters a URI path carries unquoted.  Space and
+# ``%`` come back percent-encoded, so position deletes naming such a
+# file cannot be matched against the plain path by bounds.
+_URI_VERBATIM = re.compile(r"[A-Za-z0-9/._~!$&'()*+,;=:@-]*")
+
+
+@dataclass
+class _ScanPlan:
+    """What a scan reads, decided from metadata alone.
+
+    ``groups`` are the surviving data files, split by the partition keys
+    whose row-level residual they still need; ``eq`` maps each equality
+    id set to its kept delete files and whether the per-row sequence
+    predicate is needed."""
+
+    groups: list[tuple[frozenset, list[dict]]]
+    data_total: int
+    pos: list[dict]
+    pos_total: int
+    eq: dict[tuple[int, ...], tuple[list[dict], bool]]
+    eq_total: int
+
+    @property
+    def data(self) -> list[dict]:
+        return [f for _, fs in self.groups for f in fs]
 
 
 def _stats_overlap(stats: dict | None, where: dict[str, tuple]) -> bool:
@@ -680,9 +770,7 @@ class MoRTable:
             return self._append_partitioned(df, spec, extra)
         files = []
         for path in self._write_files(df, self.path / "data", "data", single_file):
-            files.append(
-                _data_file_entry(path)
-            )
+            files.append(_file_entry(path))
         return self._commit("append", files, **extra)
 
     def _append_partitioned(
@@ -747,7 +835,7 @@ class MoRTable:
             shutil.move(str(part), str(final))
             files.append(
                 {
-                    **_data_file_entry(str(final)),
+                    **_file_entry(str(final)),
                     "spec_id": spec["spec_id"],
                     "partition": pvals,
                 }
@@ -800,7 +888,7 @@ class MoRTable:
                 "layouts; use append() on a partitioned table"
             )
         files = [
-            _data_file_entry(path)
+            _file_entry(path)
             for path in self._write_batches_one_job(dfs, self.path / "data", "data")
         ]
         return self._commit("append", files)
@@ -835,11 +923,33 @@ class MoRTable:
             paths = self._write_files(
                 self._normalize_pos_deletes(df), dest, "pos-delete", single_file
             )
-        files = [
-            {"path": p, "kind": "pos-delete", "record_count": _footer_row_count(p)}
-            for p in paths
-        ]
+        files = [_file_entry(p, "pos-delete") for p in paths]
         return self._commit("delete-position", files)
+
+    def _keys_of(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
+        """``df`` projected to ``key_cols`` in the table's types, so the
+        scan reads every equality-delete file with the table's key
+        schema and infers nothing."""
+        schema = self.schema.to_spark()
+        return df.select(*[F.col(c).cast(schema[c].dataType).alias(c) for c in key_cols])
+
+    def _read_keys(self, files: list[dict], key_schema: T.StructType) -> DataFrame:
+        """The keys of equality-delete ``files`` in the table's key types.
+        Entries with ``stats`` were written by ``_keys_of`` and share one
+        scan with ``key_schema``.  Older entries may hold other physical
+        types (a Python-inferred ``bigint`` on an ``int`` key, which the
+        reader refuses to narrow), so each is read with its own schema
+        and cast."""
+        paths = [f["path"] for f in files if "stats" in f]
+        parts = [self.spark.read.schema(key_schema).parquet(*paths)] if paths else []
+        parts += [
+            self.spark.read.parquet(f["path"]).select(
+                *[F.col(c.name).cast(c.dataType).alias(c.name) for c in key_schema]
+            )
+            for f in files
+            if "stats" not in f
+        ]
+        return reduce(DataFrame.unionAll, parts)
 
     def add_equality_deletes(
         self,
@@ -866,15 +976,12 @@ class MoRTable:
             for b in df:
                 assert set(b.columns) == set(cols), (b.columns, cols)
             paths = self._write_batches_one_job(
-                [b.select(*cols) for b in df], dest, "eq-delete"
+                [self._keys_of(b, cols) for b in df], dest, "eq-delete"
             )
         else:
             assert set(df.columns) == set(cols), (df.columns, cols)
-            paths = self._write_files(df.select(*cols), dest, "eq-delete", single_file)
-        files = [
-            {"path": p, "kind": "eq-delete", "record_count": _footer_row_count(p), "equality_ids": ids}
-            for p in paths
-        ]
+            paths = self._write_files(self._keys_of(df, cols), dest, "eq-delete", single_file)
+        files = [_file_entry(p, "eq-delete", equality_ids=ids) for p in paths]
         return self._commit("delete-equality", files, equality_ids=ids)
 
     def merge(self, source: DataFrame, on_ids: list[int] | None = None) -> dict:
@@ -898,12 +1005,9 @@ class MoRTable:
         key_cols = self.schema.names_for_ids(ids)
         cols = [f.name for f in self.schema.fields]
         del_paths = self._write_files(
-            source.select(*key_cols).distinct(), self.path / "deletes", "eq-delete", True
+            self._keys_of(source, key_cols).distinct(), self.path / "deletes", "eq-delete", True
         )
-        files = [
-            {"path": p, "kind": "eq-delete", "record_count": _footer_row_count(p), "equality_ids": ids}
-            for p in del_paths
-        ]
+        files = [_file_entry(p, "eq-delete", equality_ids=ids) for p in del_paths]
         # on a partitioned table the merged-in data files must carry the
         # partition tuple + spec id like any append, or partition-filtered
         # scans lose pruning on them forever (review r7); delete files are
@@ -914,7 +1018,7 @@ class MoRTable:
             files += self._write_partitioned_entries(source.select(*cols), spec)
         else:
             files += [
-                _data_file_entry(p)
+                _file_entry(p)
                 for p in self._write_files(
                     source.select(*cols), self.path / "data", "data", False
                 )
@@ -1356,7 +1460,7 @@ class MoRTable:
             files = self._write_partitioned_entries(current, spec)
         else:
             files = [
-                _data_file_entry(p)
+                _file_entry(p)
                 for p in self._write_files(
                     current, self.path / "data", "compacted", False
                 )
@@ -1475,7 +1579,7 @@ class MoRTable:
                 .drop("__z")
             )
             paths = self._write_files(zdf, self.path / "data", "zorder", False)
-            files = [_data_file_entry(p) for p in paths]
+            files = [_file_entry(p) for p in paths]
         return self._commit("replace", files, baseline=True, zorder_by=cols)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
@@ -1599,7 +1703,7 @@ class MoRTable:
         if to is None:
             # no main-visible snapshot yet (empty table, or only staged/
             # branch commits): the CDC window is empty, not an error
-            return self.spark.createDataFrame([], self.schema.to_spark())
+            return self._empty()
         if to not in ids:
             raise ValueError(f"snapshot {to_snapshot_id} does not exist")
         to_snap = next(s for s in self._meta["snapshots"] if s["id"] == to)
@@ -1629,7 +1733,7 @@ class MoRTable:
             if f["kind"] == "data"
         ]
         if not files:
-            return self.spark.createDataFrame([], self.schema.to_spark())
+            return self._empty()
         return self.spark.read.schema(self.schema.to_spark()).parquet(
             *[f["path"] for f in files]
         )
@@ -1682,26 +1786,36 @@ class MoRTable:
             )
         return self._scan_resolved(snapshot_id, where, partition_filter)
 
-    def _scan_resolved(
+    def _plan(
         self,
-        snapshot_id: int | None = None,
-        where: dict[str, tuple] | None = None,
-        partition_filter: dict[str, object] | None = None,
-        keep_meta: bool = False,
-    ) -> DataFrame:
-        """Read the table state as of ``snapshot_id`` (default: current).
+        snapshot_id: int | None,
+        where: dict[str, tuple] | None,
+        partition_filter: dict[str, object] | None,
+    ) -> _ScanPlan:
+        """Scan planning from metadata alone: which data files survive
+        ``where`` / ``partition_filter``, and which delete files can touch
+        them — Iceberg's delete-file index (table spec, "Scan Planning"):
 
-        Plan shape: parquet scan of the data files (+hidden ``_metadata``)
-        → anti-join position deletes on (file, pos) → anti-join equality
-        deletes on key columns with ``data.seq < delete.seq``.  Both delete
-        sides are tiny relative to data and broadcast, so the data side is
-        never shuffled by the read itself.
-        """
-        data_files = self._files_of_kind("data", snapshot_id)
+        * a position-delete file is kept when the bounds of its
+          ``file_path`` column contain a surviving data file's path;
+        * an equality-delete file is kept when some surviving data file is
+          OLDER than it (sequence number) and may share a key with it
+          (``_eq_may_match``);
+        * per equality id set, the per-row ``data.seq < delete.seq``
+          predicate is needed only when some surviving data file that may
+          share a key is NOT older than some kept delete file (``merge``
+          commits both at one sequence number; an append after a delete
+          is newer than it).  Otherwise the sequence rule is already
+          decided here.
+
+        Bounds a delete file lacks prune nothing.  One metadata walk."""
+        data, pos, eq = [], [], []
+        for f in self._files_of_kind(None, snapshot_id):
+            {"data": data, "pos-delete": pos, "eq-delete": eq}[f["kind"]].append(f)
+        data_total = len(data)
         if where:
-            data_files = [
-                f for f in data_files if _stats_overlap(f.get("stats"), where)
-            ]
+            data = [f for f in data if _stats_overlap(f.get("stats"), where)]
+        groups = [(frozenset(), data)]
         if partition_filter:
             # prune ONLY files written under the spec whose definition of
             # the field the residual predicate uses (the newest): after
@@ -1735,9 +1849,9 @@ class MoRTable:
                 }
                 for k in partition_filter
             }
-            data_files = [
+            data = [
                 f
-                for f in data_files
+                for f in data
                 if all(
                     k not in (f.get("partition") or {})
                     or f.get("spec_id") not in eligible[k]
@@ -1748,24 +1862,6 @@ class MoRTable:
                     for k, v in partition_filter.items()
                 )
             ]
-        cols = [f.name for f in self.schema.fields]
-        if not data_files:
-            return self.spark.createDataFrame([], self.schema.to_spark())
-
-        def _read(paths: list[str]) -> DataFrame:
-            return (
-                self.spark.read.schema(self.schema.to_spark())
-                .parquet(*paths)
-                .select(
-                    *cols,
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            )
-
-        if partition_filter:
             # split the surviving files by which keys still need the
             # ROW-level residual (review r9): a file that is
             # prune-eligible on k was kept because its STORED partition
@@ -1777,8 +1873,8 @@ class MoRTable:
             # ineligible-spec / field-less files keep the residual, per
             # key.  Groups are tiny (one per residual-key combination —
             # 1-2 in practice), so the union adds no shuffle.
-            groups: dict[frozenset, list[dict]] = {}
-            for f in data_files:
+            by_need: dict[frozenset, list[dict]] = {}
+            for f in data:
                 need = frozenset(
                     k
                     for k, v in partition_filter.items()
@@ -1788,31 +1884,121 @@ class MoRTable:
                     # skipped, so the rows must be re-checked (r10)
                     or _hive_pval(v) is None
                 )
-                groups.setdefault(need, []).append(f)
-            parts = []
-            for need, fs in sorted(groups.items(), key=lambda kv: sorted(kv[0])):
-                part = _read([f["path"] for f in fs])
-                for k in sorted(need):
-                    # eqNullSafe: identical to == for non-null probes,
-                    # and lets partition_filter={'c': None} actually
-                    # select the null partition instead of NULL-ing the
-                    # predicate away (r10)
-                    part = part.where(
-                        self._transform_expr(self._spec_field(k)).eqNullSafe(
-                            F.lit(partition_filter[k])
-                        )
-                    )
-                parts.append(part)
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        else:
-            df = _read([f["path"] for f in data_files])
+                by_need.setdefault(need, []).append(f)
+            groups = sorted(by_need.items(), key=lambda kv: sorted(kv[0]))
 
-        pos_files = self._files_of_kind("pos-delete", snapshot_id)
-        if pos_files:
+        paths = sorted(_canon_path(f["path"]) for f in data)
+        verbatim = all(_URI_VERBATIM.fullmatch(p) for p in paths)
+
+        def pos_needed(f: dict) -> bool:
+            b = (f.get("stats") or {}).get("file_path")
+            if b is None or not verbatim:
+                return True
+            i = bisect.bisect_left(paths, b[0])
+            return i < len(paths) and paths[i] <= b[1]
+
+        # _files_of_kind already merged sequence numbers and the
+        # snapshot-level equality_ids fallback into each entry
+        by_ids: dict[tuple[int, ...], list[dict]] = {}
+        for f in eq:
+            by_ids.setdefault(tuple(f["equality_ids"]), []).append(f)
+        # data files oldest first: the files older than a delete file are
+        # a prefix, the rest a suffix
+        by_seq = sorted(data, key=lambda d: d["sequence_number"])
+        seqs = [d["sequence_number"] for d in by_seq]
+        kept_eq = {}
+        for ids, fs in by_ids.items():
+            index = _key_bounds_index(by_seq, self.schema.names_for_ids(list(ids)))
+            kept, need_seq = [], False
+            for f in fs:
+                hits = _eq_may_match(f, index, len(by_seq))
+                i = bisect.bisect_left(seqs, f["sequence_number"])
+                if hits[:i].any():
+                    kept.append(f)
+                    need_seq = need_seq or bool(hits[i:].any())
+            if kept:
+                kept_eq[ids] = (kept, need_seq)
+        return _ScanPlan(
+            groups=[(need, fs) for need, fs in groups if fs],
+            data_total=data_total,
+            pos=[f for f in pos if data and pos_needed(f)],
+            pos_total=len(pos),
+            eq=kept_eq,
+            eq_total=len(eq),
+        )
+
+    def _empty(self, keep_meta: bool = False) -> DataFrame:
+        """An empty relation with the table schema, nullability included.
+        Its RDD has no partitions, so counting it runs no task and starts
+        no Python worker (a ``createDataFrame([], ...)`` list relation
+        does)."""
+        schema = self.schema.to_spark()
+        if keep_meta:
+            schema = schema.add("__file", "string").add("__pos", "long")
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
+
+    def _scan_resolved(
+        self,
+        snapshot_id: int | None = None,
+        where: dict[str, tuple] | None = None,
+        partition_filter: dict[str, object] | None = None,
+        keep_meta: bool = False,
+    ) -> DataFrame:
+        """Read the table state as of ``snapshot_id`` (default: current).
+
+        Plan shape, every relation a parquet scan or a JVM literal (no
+        Python-worker relation, no schema-inference job at construction):
+        scan of the surviving data files (+hidden ``_metadata``) →
+        anti-join the kept position-delete files on (file, pos) → per
+        equality id set, anti-join its kept delete files, one scan per
+        sequence number read with the table's key schema (``_read_keys``),
+        on the key columns (null-safe).  ``_plan``
+        decides the sequence rule from metadata where it can; only where
+        it cannot (after ``merge``, or an append that follows a delete
+        and may share its keys) do rows carry ``__data_seq``, joined from
+        a broadcast file → sequence literal, and the anti-join keeps the
+        ``__data_seq < __del_seq`` conjunct.  Delete sides are tiny
+        relative to data and broadcast, so the data side is never
+        shuffled by the read itself.
+        """
+        plan = self._plan(snapshot_id, where, partition_filter)
+        if not plan.groups:
+            return self._empty(keep_meta)
+        schema = self.schema.to_spark()
+        cols = [f.name for f in self.schema.fields]
+
+        def _read(paths: list[str]) -> DataFrame:
+            return (
+                self.spark.read.schema(schema)
+                .parquet(*paths)
+                .select(
+                    *cols,
+                    F.regexp_replace(
+                        F.col("_metadata.file_path"), "^file:(//)?", ""
+                    ).alias("__file"),
+                    F.col("_metadata.row_index").alias("__pos"),
+                )
+            )
+
+        parts = []
+        for need, fs in plan.groups:
+            part = _read([f["path"] for f in fs])
+            for k in sorted(need):
+                # eqNullSafe: identical to == for non-null probes,
+                # and lets partition_filter={'c': None} actually
+                # select the null partition instead of NULL-ing the
+                # predicate away (r10)
+                part = part.where(
+                    self._transform_expr(self._spec_field(k)).eqNullSafe(
+                        F.lit(partition_filter[k])
+                    )
+                )
+            parts.append(part)
+        df = reduce(DataFrame.unionByName, parts)
+
+        if plan.pos:
             pos = self.spark.read.schema("file_path string, pos long").parquet(
-                *[f["path"] for f in pos_files]
+                *[f["path"] for f in plan.pos]
             )
             # no broadcast hint: the delete SET is data-dependent (GBs
             # after a large MoR delete), and an explicit hint is honored
@@ -1827,40 +2013,50 @@ class MoRTable:
                 "left_anti",
             )
 
-        eq_files = self._files_of_kind("eq-delete", snapshot_id)
-        if eq_files:
-            # file -> sequence number map is file-level metadata (tiny)
-            seq_rows = [(_canon_path(f["path"]), f["sequence_number"]) for f in data_files]
-            file_seq = self.spark.createDataFrame(seq_rows, "__file2 string, __data_seq int")
-            df = df.join(F.broadcast(file_seq), df["__file"] == file_seq["__file2"], "left").drop(
-                "__file2"
+        if any(need_seq for _, need_seq in plan.eq.values()):
+            # file -> sequence number map: one row per surviving data file
+            # (file-level metadata, bounded by the file count — hence the
+            # hint), built in the JVM from one JSON literal
+            seqs = json.dumps(
+                [
+                    {"__file2": _canon_path(f["path"]), "__data_seq": f["sequence_number"]}
+                    for f in plan.data
+                ]
             )
-            # group eq-delete files by their equality-id set (usually one);
-            # _files_of_kind already merged sequence numbers and the
-            # snapshot-level equality_ids fallback into each entry
-            by_ids: dict[tuple[int, ...], list[dict]] = {}
-            for f in eq_files:
-                by_ids.setdefault(tuple(f["equality_ids"]), []).append(f)
-            for ids, dfiles in by_ids.items():
-                key_cols = self.schema.names_for_ids(list(ids))
-                parts = []
-                for f in dfiles:
-                    part = self.spark.read.parquet(f["path"]).select(*key_cols)
-                    parts.append(part.withColumn("__del_seq", F.lit(f["sequence_number"])))
-                dels = parts[0]
-                for p in parts[1:]:
-                    dels = dels.unionAll(p)
-                cond = F.col("__data_seq") < F.col("__del_seq")
-                for c in key_cols:
-                    # eqNullSafe (review r10): Iceberg equality deletes
-                    # match null to null; a plain == evaluates NULL for
-                    # a NULL key and the anti-join kept the row forever
-                    # while summary()'s derived count subtracted it
-                    cond = cond & df[c].eqNullSafe(dels[c])
-                # unhinted like the pos-delete side above: eq-delete key
-                # sets are data-dependent too (review r8)
-                df = df.join(dels, cond, "left_anti")
-            df = df.drop("__data_seq")
+            file_seq = self.spark.range(1).select(
+                F.inline(
+                    F.from_json(
+                        F.lit(seqs), "array<struct<__file2:string,__data_seq:int>>"
+                    )
+                )
+            )
+            df = df.join(
+                F.broadcast(file_seq), df["__file"] == file_seq["__file2"], "left"
+            ).drop("__file2")
+        for ids, (dfiles, need_seq) in plan.eq.items():
+            key_cols = self.schema.names_for_ids(list(ids))
+            key_schema = T.StructType([schema[c] for c in key_cols])
+            # one parquet scan per sequence number, tagged with it (the
+            # tag is pruned away where the sequence rule is decided)
+            by_seq: dict[int, list[dict]] = {}
+            for f in dfiles:
+                by_seq.setdefault(f["sequence_number"], []).append(f)
+            dels = reduce(
+                DataFrame.unionAll,
+                [
+                    self._read_keys(fs, key_schema).withColumn("__del_seq", F.lit(seq))
+                    for seq, fs in sorted(by_seq.items())
+                ],
+            )
+            conds = [F.col("__data_seq") < F.col("__del_seq")] if need_seq else []
+            # eqNullSafe (review r10): Iceberg equality deletes match null
+            # to null; a plain == evaluates NULL for a NULL key and the
+            # anti-join kept the row forever while summary()'s derived
+            # count subtracted it.  Unhinted like the pos-delete side
+            # above: eq-delete key sets are data-dependent too (review r8)
+            conds += [df[c].eqNullSafe(dels[c]) for c in key_cols]
+            df = df.join(dels, reduce(lambda a, b: a & b, conds), "left_anti")
+        df = df.drop("__data_seq")
 
         if not keep_meta:
             df = df.drop("__file", "__pos")
@@ -1875,18 +2071,21 @@ class MoRTable:
         return df
 
     def plan_report(self, where: dict[str, tuple]) -> dict:
-        """Planning-time pruning report: how many live data files the
-        footer-stats planner keeps vs prunes for ``where`` — the SAME
-        ``_stats_overlap`` decision ``scan(where=...)`` makes, exposed
-        as supported surface (review r10: the q_mor_prune_report
-        operator reached into the private ``_files_of_kind`` /
-        ``_stats_overlap`` internals, which churn across rounds)."""
-        files = self._files_of_kind("data", None)
-        surviving = [f for f in files if _stats_overlap(f.get("stats"), where)]
+        """Planning-time pruning report for ``where`` on the current
+        snapshot — the SAME ``_plan`` decision ``scan(where=...)`` makes:
+        live data files kept vs pruned by footer stats, and position- /
+        equality-delete files kept vs pruned because they cannot touch a
+        kept data file."""
+        plan = self._plan(None, where, None)
+        eq_kept = sum(len(fs) for fs, _ in plan.eq.values())
         return {
-            "total_files": len(files),
-            "pruned_files": len(files) - len(surviving),
-            "surviving_files": len(surviving),
+            "total_files": plan.data_total,
+            "pruned_files": plan.data_total - len(plan.data),
+            "surviving_files": len(plan.data),
+            "surviving_pos_delete_files": len(plan.pos),
+            "pruned_pos_delete_files": plan.pos_total - len(plan.pos),
+            "surviving_eq_delete_files": eq_kept,
+            "pruned_eq_delete_files": plan.eq_total - eq_kept,
         }
 
     # -- summary (O14) ------------------------------------------------------

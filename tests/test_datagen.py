@@ -373,6 +373,132 @@ def test_incremental_scan_windows(spark, tmp_path):
         t.incremental_scan(1, 99)
 
 
+def test_empty_scans_keep_the_table_schema(spark, tmp_path):
+    """An empty table's scan, an empty incremental window and a scan whose
+    ``where`` prunes every file all return the table schema exactly,
+    nullability included, and 0 rows.  A ``delete_where`` whose bounds
+    prune every file deletes nothing instead of failing on the missing
+    file/position columns."""
+    from pyspark.sql import functions as F
+
+    from iceberg_data_gen_spark.datagen.config import FileConfig
+    from iceberg_data_gen_spark.datagen.generator import FixSchemaGenerator
+    from iceberg_data_gen_spark.table.table import MoRTable
+
+    fc = FileConfig(rows_per_file=10, file_count=1)
+    t = MoRTable.create(
+        spark, str(tmp_path / "empty"), FixSchemaGenerator(fc, fc, fc).schema()
+    )
+    want = t.schema.to_spark()
+    assert not all(f.nullable for f in want)  # nullability is checked
+    for df in (t.scan(), t.incremental_scan(0)):
+        assert df.schema == want and df.count() == 0
+
+    t.append(
+        spark.range(10).select(
+            F.col("id").cast("string").alias("foo"),
+            F.col("id").cast("int").alias("bar"),
+            F.lit(True).alias("baz"),
+        ),
+        single_file=True,
+    )
+    outside = {"bar": (100, 200)}
+    df = t.scan(where=outside)
+    assert df.schema == want and df.count() == 0
+    snap = t.delete_where("bar >= 100", where=outside)
+    assert snap["operation"] == "delete-position"
+    assert sum(f["record_count"] for f in snap["files"]) == 0
+    assert t.scan().count() == 10
+
+
+def test_equality_delete_with_null_key_is_not_pruned_by_bounds(spark, tmp_path):
+    """Footer bounds leave NULLs out, and an equality delete matches NULL
+    to NULL: a delete file holding keys {NULL, 7} must still reach a data
+    file whose non-NULL keys are {0, 1}, while a NULL-free delete file of
+    {7} is pruned from the plan."""
+    from iceberg_data_gen_spark.table.table import Field, MoRTable, TableSchema
+
+    schema = TableSchema(
+        [Field(1, "foo", "string", False), Field(2, "bar", "int", False)], [2]
+    )
+    t = MoRTable.create(spark, str(tmp_path / "nullkey"), schema)
+    t.append(
+        spark.createDataFrame([("a", 0), ("b", 1), ("c", None)], "foo string, bar int"),
+        single_file=True,
+    )
+    t.add_equality_deletes(spark.createDataFrame([(7,)], "bar int"), [2])
+    assert t.plan_report({})["pruned_eq_delete_files"] == 1
+    t.add_equality_deletes(spark.createDataFrame([(None,), (7,)], "bar int"), [2])
+    report = t.plan_report({})
+    assert (report["surviving_eq_delete_files"], report["pruned_eq_delete_files"]) == (1, 1)
+    assert sorted(r.foo for r in t.scan().collect()) == ["a", "b"]
+
+
+def test_equality_delete_reaches_data_file_without_bounds(spark, tmp_path):
+    """A data file whose entry has no bounds on the key (written without
+    footer statistics, or committed before entries carried ``stats``)
+    may hold any key: a NULL-free equality delete of {7} must reach it,
+    although its bounds are disjoint from the only data file that has
+    bounds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_data_gen_spark.table.table import Field, MoRTable, TableSchema
+
+    schema = TableSchema(
+        [Field(1, "foo", "string", False), Field(2, "bar", "int", False)], [2]
+    )
+    t = MoRTable.create(spark, str(tmp_path / "nobounds"), schema)
+    t.append(
+        spark.createDataFrame([("a", 100), ("b", 109)], "foo string, bar int"),
+        single_file=True,
+    )
+    bare = str(tmp_path / "nobounds" / "bare-data.parquet")
+    pq.write_table(
+        pa.table({"foo": ["c", "d"], "bar": pa.array([7, 8], pa.int32())}),
+        bare,
+        write_statistics=False,
+    )
+    t._commit("append", [{"path": bare, "kind": "data", "record_count": 2}])
+    t.add_equality_deletes(spark.createDataFrame([(7,)], "bar int"), [2])
+    assert t.plan_report({})["surviving_eq_delete_files"] == 1
+    assert sorted(r.foo for r in t.scan().collect()) == ["a", "b", "d"]
+
+
+def test_equality_delete_entry_without_stats_reads_its_own_types(spark, tmp_path):
+    """Equality-delete entries committed before delete files carried
+    ``stats`` hold the caller's key types: a Python-inferred ``bigint``
+    file on an ``int`` key.  The reader refuses to narrow INT64 to
+    ``int``, so such a file is read with its own schema and cast; it is
+    never pruned, and it deletes next to a file in the table's types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_data_gen_spark.table.table import Field, MoRTable, TableSchema
+
+    schema = TableSchema(
+        [Field(1, "foo", "string", False), Field(2, "bar", "int", False)], [2]
+    )
+    t = MoRTable.create(spark, str(tmp_path / "oldkeys"), schema)
+    t.append(
+        spark.createDataFrame([("a", 0), ("b", 1), ("c", 2)], "foo string, bar int"),
+        single_file=True,
+    )
+    old = str(tmp_path / "oldkeys" / "old-eq-delete.parquet")
+    pq.write_table(pa.table({"bar": pa.array([1], pa.int64())}), old)
+    t._commit(
+        "delete-equality",
+        [{"path": old, "kind": "eq-delete", "record_count": 1, "equality_ids": [2]}],
+        equality_ids=[2],
+    )
+    assert sorted(r.foo for r in t.scan().collect()) == ["a", "c"]
+    assert t.plan_report({"bar": (5, 9)})["surviving_eq_delete_files"] == 0
+    t.add_equality_deletes(spark.createDataFrame([(2,)], "bar int"), [2])
+    assert sorted(r.foo for r in t.scan().collect()) == ["a"]
+    summary = t.summary(measure=True)
+    assert summary["measured_total"] == summary["derived_total"] == 1
+
+
 def test_merge_upsert_semantics(spark, tmp_path):
     """merge() = one overwrite snapshot; matched keys replaced, unmatched
     inserted, same-commit inserts not hit by the commit's own delete

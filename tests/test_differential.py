@@ -451,6 +451,192 @@ def test_delete_interleave_model(spark, ops):
         shutil.rmtree(base, ignore_errors=True)
 
 
+# key domains small enough that deletes hit, appends bring deleted keys
+# back, and NULL keys meet NULL deletes
+_FOOS = ["a", "b", None]
+_BARS = [0, 1, 2, 3, None]
+
+
+def _model_rows(r: int, n: int) -> list[tuple]:
+    return [
+        (_FOOS[(r >> (2 * i)) % 3], _BARS[(r // 3 + 7 * i) % 5], bool((r >> i) & 1))
+        for i in range(n)
+    ]
+
+
+def _run_delete_semantics_model(spark, t, ops, pick) -> set[str]:
+    """Replay ``ops`` on ``t`` and on a pure-Python model of Iceberg's
+    delete rules; return the planning branches the scans took
+    ("decided": the sequence rule settled from metadata, "per-row": the
+    ``__data_seq < __del_seq`` predicate kept).
+
+    Model: a position delete kills the named row of the named file; an
+    equality delete (or a merge's) at sequence number s kills the rows,
+    matching on its key columns with NULL equal to NULL, of the data
+    files whose sequence number is below s — so a merge's own data files
+    and every later append survive it.  After each op: ``scan()``, a
+    ``where`` scan (delete-file pruning by bounds) and time travel to a
+    snapshot picked by ``pick`` must equal the model."""
+    import random
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    rng = random.Random(pick)
+    ddl = "foo string, bar int, baz boolean"
+    files: list[dict] = []  # {"path", "seq", "rows": [[foo, bar, baz, alive]]}
+    states: list[tuple[int, Counter]] = []  # (snapshot id, live rows then)
+    seq = 0
+    seen: set[str] = set()
+
+    def live() -> Counter:
+        return Counter(tuple(r[:3]) for f in files for r in f["rows"] if r[3])
+
+    def add_files(snap: dict, rows: list[tuple]) -> None:
+        new = []
+        for e in snap["files"]:
+            if e["kind"] == "data":
+                got = [
+                    (x["foo"], x["bar"], x["baz"])
+                    for x in pq.read_table(e["path"]).to_pylist()
+                ]
+                new.append({"path": e["path"], "seq": seq, "rows": [[*x, True] for x in got]})
+        assert Counter(tuple(r[:3]) for f in new for r in f["rows"]) == Counter(rows)
+        files.extend(new)
+
+    def eq_kill(key_cols: list[int], keys: set[tuple]) -> None:
+        for f in files:
+            if f["seq"] < seq:
+                for row in f["rows"]:
+                    if tuple(row[c] for c in key_cols) in keys:
+                        row[3] = False
+
+    def scan_rows(df) -> Counter:
+        return Counter((r.foo, r.bar, r.baz) for r in df.collect())
+
+    def note_branches(snapshot_id) -> None:
+        for _, need_seq in t._plan(snapshot_id, None, None).eq.values():
+            seen.add("per-row" if need_seq else "decided")
+
+    for kind, r in ops:
+        if kind == "append":
+            rows = _model_rows(r, 1 + r % 4)
+            seq += 1
+            add_files(t.append(spark.createDataFrame(rows, ddl), single_file=True), rows)
+        elif kind == "append_batches":
+            batches = [_model_rows(r + b, 1 + (r + b) % 3) for b in range(2)]
+            seq += 1
+            snap = t.append_batches([spark.createDataFrame(b, ddl) for b in batches])
+            add_files(snap, [x for b in batches for x in b])
+        elif kind == "posdel":
+            cand = [f for f in files if f["rows"]]
+            if not cand:
+                continue
+            targets = {
+                (f["path"], p)
+                for i in range(1 + r % 2)
+                for f in [cand[(r >> (3 * i)) % len(cand)]]
+                for p in [(r >> (5 + i)) % len(f["rows"])]
+            }
+            seq += 1
+            t.add_position_deletes(
+                spark.createDataFrame(sorted(targets), "file_path string, pos long")
+            )
+            for f in files:
+                for p, row in enumerate(f["rows"]):
+                    if (f["path"], p) in targets:
+                        row[3] = False
+        elif kind in ("eqdel", "merge"):
+            ids = [2] if r % 2 else [1, 2]
+            key_cols = [i - 1 for i in ids]
+            key_ddl = ", ".join(["foo string", "bar int"][2 - len(ids):])
+            if kind == "eqdel":
+                keys = [tuple(x[c] for c in key_cols) for x in _model_rows(r // 2, 1 + r % 4)]
+                if (r >> 4) & 1:  # a NULL bar beside the bounds of the rest
+                    keys.append((*keys[0][:-1], None))
+                seq += 1
+                if r % 3 == 0 and len(keys) > 1:  # two files, one commit
+                    t.add_equality_deletes(
+                        [spark.createDataFrame(keys[:1], key_ddl), spark.createDataFrame(keys[1:], key_ddl)],
+                        ids,
+                    )
+                else:
+                    t.add_equality_deletes(spark.createDataFrame(keys, key_ddl), ids)
+                eq_kill(key_cols, set(keys))
+            else:
+                rows = _model_rows(r // 2, 1 + r % 4)
+                seq += 1
+                snap = t.merge(spark.createDataFrame(rows, ddl), ids)
+                eq_kill(key_cols, {tuple(x[c] for c in key_cols) for x in rows})
+                add_files(snap, rows)
+        states.append((t.current_snapshot_id(), live()))
+
+        assert scan_rows(t.scan()) == live(), (kind, ops)
+        note_branches(None)
+        lo = r % 4
+        got = scan_rows(t.scan(where={"bar": (lo, lo + 1)}))
+        want = Counter(
+            {k: n for k, n in live().items() if k[1] is not None and lo <= k[1] <= lo + 1}
+        )
+        assert got == want, (kind, lo, ops)
+        sid, state = rng.choice(states)
+        assert scan_rows(t.scan(snapshot_id=sid)) == state, (sid, ops)
+        note_branches(sid)
+    return seen
+
+
+_DELETE_OPS = st.lists(
+    st.tuples(
+        st.sampled_from(["append", "append_batches", "posdel", "eqdel", "merge"]),
+        st.integers(0, 10**6),
+    ),
+    min_size=2,
+    max_size=6,
+)
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(ops=_DELETE_OPS, pick=st.integers(0, 10**6), r=st.integers(0, 10**6))
+def test_delete_semantics_model(spark, ops, pick, r):
+    """Differential fuzz of the merge-on-read delete rules against the
+    scan planner: random appends, multi-file appends, position deletes,
+    equality deletes on key sets [bar] and [foo, bar] (NULL keys
+    included; the small key domain brings deleted keys back in later
+    appends) and merges, each op checked by
+    ``_run_delete_semantics_model``.  Every example opens with an append
+    and an equality delete on its keys (the sequence rule decided by
+    metadata) and closes with a merge (data and delete at one sequence
+    number: the per-row predicate kept), so both planning branches run
+    in each example."""
+    import shutil
+    import tempfile
+
+    from iceberg_data_gen_spark.table.table import Field, MoRTable, TableSchema
+
+    schema = TableSchema(
+        fields=[
+            Field(1, "foo", "string", required=False),
+            Field(2, "bar", "int", required=False),
+            Field(3, "baz", "boolean", required=False),
+        ],
+        identifier_field_ids=[2],
+    )
+    base = tempfile.mkdtemp(prefix="mor-delsem-")
+    try:
+        t = MoRTable.create(spark, base, schema)
+        # the closing merge upserts the opening append's first row, so an
+        # older data file shares its keys whatever ran in between
+        ops = [("append", 2 * r), ("eqdel", 4 * r), *ops, ("merge", 4 * r)]
+        seen = _run_delete_semantics_model(spark, t, ops, pick)
+        assert seen == {"decided", "per-row"}, (seen, ops)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def _run_mutation_model(spark, t, ops, partition_check=None):
     """Replay a random mutation interleave (append / eq-delete / MERGE /
     compact / cluster_by / expire) against the pure-Python model on an

@@ -282,6 +282,130 @@ def test_mor_merge_scan_broadcasts_delete_side(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _prepared_table(spark, tmp_path):
+    """A reference-shaped ``prepare()`` (5 data files of 100 rows, 2
+    position-delete files on data files 0-1, 2 equality-delete files on
+    the ``bar`` values of data files 2-3; survivors ``bar`` 400..499)."""
+    from iceberg_data_gen_spark.datagen.app import IcebergDataGeneratorApp
+    from iceberg_data_gen_spark.datagen.config import (
+        CatalogConfig, Config, FileConfig, TableConfig,
+    )
+
+    cfg = Config(
+        catalog=CatalogConfig(catalog_type="local", warehouse=str(tmp_path / "wh")),
+        table=TableConfig(namespace="ns1", table_name="t1"),
+        data_files=FileConfig(rows_per_file=100, file_count=5),
+        pos_delete_files=FileConfig(rows_per_file=100, file_count=2),
+        equality_delete_files=FileConfig(rows_per_file=100, file_count=2),
+    )
+    app = IcebergDataGeneratorApp(spark, cfg)
+    app.prepare()
+    return app.catalog.load_table("ns1", "t1")
+
+
+def _jobs_started(spark) -> int:
+    return spark._jsc.sc().dagScheduler().nextJobId()
+
+
+def _unadaptive_plan_and_lineages(spark, df) -> tuple[str, list[str]]:
+    """``df``'s executed plan with AQE off, and the debug strings of the
+    RDD it computes and of the RDD every plan leaf reads.  With AQE off
+    the broadcast sides are subtrees of that one plan; their RDDs are
+    not in ``toRdd``'s lineage, so the leaves are asked directly."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan()
+        leaves = plan.collectLeaves()
+        lineages = [qe.toRdd().toDebugString()] + [
+            leaves.apply(i).execute().toDebugString() for i in range(leaves.size())
+        ]
+        return plan.toString(), lineages
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_mor_reference_scan_is_planned_from_metadata(spark, tmp_path):
+    """On the reference shape every equality delete is newer than every
+    data file, so the sequence rule is decided at planning time: building
+    the scan starts no Spark job (no schema inference), the plan carries
+    no ``__data_seq`` join, and no relation runs through Python workers."""
+    t = _prepared_table(spark, tmp_path)
+    before = _jobs_started(spark)
+    df = t.scan()
+    assert _jobs_started(spark) == before
+    plan, lineages = _unadaptive_plan_and_lineages(spark, df)
+    assert "__data_seq" not in plan, plan
+    assert plan.count("LeftAnti") == 2, plan
+    assert not any("PythonRDD" in ln for ln in lineages), lineages
+    assert sorted(r.bar for r in df.collect()) == list(range(400, 500))
+
+
+def test_mor_merge_scan_keeps_sequence_predicate_in_jvm(spark, tmp_path):
+    """After ``merge`` the new data files share the delete's sequence
+    number, so metadata cannot decide the rule: rows carry ``__data_seq``
+    — from a JVM literal, never a Python-worker relation."""
+    from pyspark.sql import functions as F
+
+    from iceberg_data_gen_spark.datagen.config import FileConfig
+    from iceberg_data_gen_spark.datagen.generator import FixSchemaGenerator
+    from iceberg_data_gen_spark.table.table import MoRTable
+
+    fc = FileConfig(rows_per_file=1, file_count=1)
+    t = MoRTable.create(spark, str(tmp_path / "t"), FixSchemaGenerator(fc, fc, fc).schema())
+
+    def rows(lo, hi, baz):
+        # two partitions each: four data files stay under the path count
+        # at which Spark lists files with a job of its own
+        return spark.range(lo, hi, numPartitions=2).select(
+            F.col("id").cast("string").alias("foo"),
+            F.col("id").cast("int").alias("bar"),
+            F.lit(baz).alias("baz"),
+        )
+
+    t.append(rows(0, 100, True))
+    t.merge(rows(50, 150, False))
+    before = _jobs_started(spark)
+    df = t.scan()
+    assert _jobs_started(spark) == before
+    plan, lineages = _unadaptive_plan_and_lineages(spark, df)
+    assert "__data_seq" in plan, plan
+    assert not any("PythonRDD" in ln for ln in lineages), lineages
+    got = sorted((r.bar, r.baz) for r in df.collect())
+    assert got == [(i, i < 50) for i in range(150)]
+
+
+def test_mor_where_scan_prunes_delete_files_by_bounds(spark, tmp_path):
+    """Delete files are matched to the surviving data files by their
+    bounds: a range inside the last data file touches no delete file (no
+    join at all); a range inside data file 0 reads exactly its one
+    position-delete file.  ``plan_report`` counts the same decision."""
+    t = _prepared_table(spark, tmp_path)
+
+    last = {"bar": (410, 420)}
+    df = t.scan(where=last)
+    assert "Join" not in plan_of(df, mode="simple")
+    assert df.count() == 11
+    assert t.plan_report(last) == {
+        "total_files": 5, "pruned_files": 4, "surviving_files": 1,
+        "surviving_pos_delete_files": 0, "pruned_pos_delete_files": 2,
+        "surviving_eq_delete_files": 0, "pruned_eq_delete_files": 2,
+    }
+
+    first = {"bar": (10, 20)}
+    df = t.scan(where=first)
+    deletes = [p for p in df.inputFiles() if "/deletes/" in p]
+    assert len(deletes) == 1 and "pos-delete-" in deletes[0], deletes
+    assert df.count() == 0
+    assert t.plan_report(first) == {
+        "total_files": 5, "pruned_files": 4, "surviving_files": 1,
+        "surviving_pos_delete_files": 1, "pruned_pos_delete_files": 1,
+        "surviving_eq_delete_files": 0, "pruned_eq_delete_files": 2,
+    }
+
+
 def test_lateral_topk_decorrelates_to_window(spark):
     """The correlated LATERAL ... ORDER BY ... LIMIT must decorrelate
     into a per-key window rank + equi-join — NOT re-execute the subquery
