@@ -32,8 +32,8 @@ from __future__ import annotations
 import bisect
 import json
 import os
-import re
 import shutil
+import threading
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -45,6 +45,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 POS_DELETE_COLS = ("file_path", "pos")  # fixed by the Iceberg spec (main.rs:188)
+
+# the session conf a batch write turns off so each batch stays its own
+# task (``MoRTable._write_batches``).  One lock for every session: two
+# writers flipping it concurrently would restore each other's value
+# mid-write, and each write already runs its batches as parallel tasks
+# on the executor cores the sessions of one SparkContext share.
+_UNION_PARTITIONING = "spark.sql.unionOutputPartitioning"
+_UNION_WRITE = threading.Lock()
 
 
 @dataclass
@@ -103,7 +111,8 @@ class TableSchema:
 
 def _canon_path(p: str) -> str:
     """Canonical file identity shared by metadata and ``_metadata.file_path``
-    (Spark reports ``file:///abs/path``; we store plain ``/abs/path``)."""
+    (Spark reports a percent-encoded ``file:`` URI, which the scan decodes;
+    we store plain ``/abs/path``)."""
     if p.startswith("file://"):
         p = p[len("file://") :]
     return p
@@ -250,13 +259,6 @@ def _eq_may_match(eq: dict, index: dict, n: int):
             lo, hi = es[c]
             hits &= ~known | ((mn <= hi) & (mx >= lo))
     return hits
-
-
-# a path Spark's ``_metadata.file_path`` renders verbatim (after the
-# ``file:`` scheme): characters a URI path carries unquoted.  Space and
-# ``%`` come back percent-encoded, so position deletes naming such a
-# file cannot be matched against the plain path by bounds.
-_URI_VERBATIM = re.compile(r"[A-Za-z0-9/._~!$&'()*+,;=:@-]*")
 
 
 @dataclass
@@ -704,16 +706,21 @@ class MoRTable:
 
     # -- writes -------------------------------------------------------------
 
-    def _write_files(self, df: DataFrame, dest: Path, stem: str, single_file: bool) -> list[str]:
+    def _write_files(
+        self, df: DataFrame, dest: Path, stem: str, single_file: bool, sort_by: tuple = ()
+    ) -> list[str]:
         """Write ``df`` as parquet into ``dest``; return final file paths.
 
         ``single_file=True`` coalesces to one output file (the reference's
         exact-rows-per-file layout, SURVEY.md §7 H2 — test-scale fidelity);
         ``single_file=False`` keeps Spark's natural partitioned layout (the
         100 TB path: executors write in parallel, byte-based sizing).
+        ``sort_by`` orders the rows of each output file.
         """
         tmp = self.path / f"_tmp-{uuid.uuid4().hex}"
         out = df.coalesce(1) if single_file else df
+        if sort_by:
+            out = out.sortWithinPartitions(*sort_by)
         out.write.mode("overwrite").parquet(str(tmp))
         finals: list[str] = []
         parts = sorted(tmp.glob("part-*.parquet"))
@@ -843,34 +850,63 @@ class MoRTable:
         shutil.rmtree(tmp)
         return files
 
-    def _write_batches_one_job(
-        self, dfs: list[DataFrame], dest: Path, stem: str
-    ) -> list[str]:
-        """Write a list of batches so batch *i* becomes exactly one parquet
-        file, submitting all write jobs CONCURRENTLY from driver threads.
+    def _write_batches(
+        self, dfs: list[DataFrame], dest: Path, kind: str, sort_by: tuple = (), **extra
+    ) -> list[dict]:
+        """Write batch *i* of ``dfs`` as exactly one file of ``kind``, all
+        batches in ONE Spark job; return the manifest entries of the
+        non-empty batches in batch order.
 
-        The reference writes its files strictly sequentially from one
-        thread (main.rs:128-151); each of our batch writes is an
-        independent Spark job, so overlapping them hides the per-job
-        scheduling latency and lets executors work on several files at
-        once while keeping the exact file-per-batch layout and row order.
-        (A single union-of-single-partition-batches job would be cheaper
-        still, but Spark 4 executes a union of SinglePartition children
-        as one task/one output file, so it cannot preserve the layout.)
-        """
+        Each batch is coalesced to one partition and sorted there by
+        ``sort_by``; the union of the batches is written once, so batch
+        *i* is task *i* and output file ``part-<i>`` — every file of the
+        commit comes from the tasks of one job, as with Iceberg's Spark
+        writer (the reference writes its files one by one,
+        main.rs:128-151).  Spark runs a union of children that share one
+        partitioning as ONE task writing one file unless
+        ``spark.sql.unionOutputPartitioning`` is off, so the write turns
+        it off on its session and restores the prior value after.  Spark
+        writes no file for an empty task other than the first, whose file
+        then holds no rows: an empty batch commits no file, as Iceberg
+        writers skip empty files."""
         if not dfs:
             return []
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(i_df):
-            i, df = i_df
-            paths = self._write_files(df, dest, f"{stem}", True)
-            assert len(paths) == 1, paths
-            return i, paths[0]
-
-        with ThreadPoolExecutor(max_workers=min(8, len(dfs))) as ex:
-            results = list(ex.map(one, enumerate(dfs)))
-        return [p for _, p in sorted(results)]
+        ones = [df.coalesce(1) for df in dfs]
+        if sort_by:
+            ones = [one.sortWithinPartitions(*sort_by) for one in ones]
+        out = reduce(DataFrame.unionByName, ones)
+        tmp = self.path / f"_tmp-{uuid.uuid4().hex}"
+        spark = out.sparkSession
+        with _UNION_WRITE:
+            prior = spark.conf.get(_UNION_PARTITIONING, None)
+            spark.conf.set(_UNION_PARTITIONING, "false")
+            try:
+                out.write.mode("overwrite").parquet(str(tmp))
+            finally:
+                if prior is None:
+                    spark.conf.unset(_UNION_PARTITIONING)
+                else:
+                    spark.conf.set(_UNION_PARTITIONING, prior)
+        parts: dict[int, Path] = {}
+        for part in tmp.glob("part-*.parquet"):
+            i = int(part.name.split("-")[1])
+            if i >= len(dfs) or i in parts:
+                raise RuntimeError(f"batch write did not give one file per batch: {part.name}")
+            parts[i] = part
+        entries = []
+        for i, df in enumerate(dfs):
+            if i not in parts:
+                # only an empty task writes no file
+                if not df.isEmpty():
+                    raise RuntimeError(f"batch {i} has rows but no file was written")
+                continue
+            entry = _file_entry(str(parts[i]), kind, **extra)
+            if entry["record_count"]:
+                final = dest / f"{kind}-{uuid.uuid4().hex[:8]}-{i}.parquet"
+                shutil.move(str(parts[i]), str(final))
+                entries.append({**entry, "path": str(final)})
+        shutil.rmtree(tmp)
+        return entries
 
     def append_batches(self, dfs: list[DataFrame]) -> dict:
         """Reference-shaped append: each DataFrame becomes exactly one data
@@ -887,24 +923,18 @@ class MoRTable:
                 "append_batches writes unpartitioned file-per-batch "
                 "layouts; use append() on a partitioned table"
             )
-        files = [
-            _file_entry(path)
-            for path in self._write_batches_one_job(dfs, self.path / "data", "data")
-        ]
-        return self._commit("append", files)
+        return self._commit("append", self._write_batches(dfs, self.path / "data", "data"))
 
     def _normalize_pos_deletes(self, df: DataFrame) -> DataFrame:
-        """Canonical, sorted (file_path, pos) rows.
-
-        The reference sorts delete rows via a buffering writer
-        (main.rs:194-199); we sort within partitions — cheap at any scale
-        and preserves the sorted-file property readers expect.
-        """
+        """Canonical ``(file_path, pos)`` rows.  Writers sort them by
+        ``POS_DELETE_COLS`` inside the partition that becomes a file, as
+        the Iceberg spec requires and the reference's buffering writer
+        does (main.rs:194-199)."""
         assert set(df.columns) == set(POS_DELETE_COLS), df.columns
         return df.select(
             F.regexp_replace("file_path", "^file:(//)?", "").alias("file_path"),
             F.col("pos").cast("long").alias("pos"),
-        ).sortWithinPartitions("file_path", "pos")
+        )
 
     def add_position_deletes(
         self, df: DataFrame | list[DataFrame], single_file: bool = True
@@ -916,14 +946,14 @@ class MoRTable:
         """
         dest = self.path / "deletes"
         if isinstance(df, list):
-            paths = self._write_batches_one_job(
-                [self._normalize_pos_deletes(b) for b in df], dest, "pos-delete"
+            files = self._write_batches(
+                [self._normalize_pos_deletes(b) for b in df], dest, "pos-delete", POS_DELETE_COLS
             )
         else:
             paths = self._write_files(
-                self._normalize_pos_deletes(df), dest, "pos-delete", single_file
+                self._normalize_pos_deletes(df), dest, "pos-delete", single_file, POS_DELETE_COLS
             )
-        files = [_file_entry(p, "pos-delete") for p in paths]
+            files = [_file_entry(p, "pos-delete") for p in paths]
         return self._commit("delete-position", files)
 
     def _keys_of(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -975,13 +1005,13 @@ class MoRTable:
         if isinstance(df, list):
             for b in df:
                 assert set(b.columns) == set(cols), (b.columns, cols)
-            paths = self._write_batches_one_job(
-                [self._keys_of(b, cols) for b in df], dest, "eq-delete"
+            files = self._write_batches(
+                [self._keys_of(b, cols) for b in df], dest, "eq-delete", equality_ids=ids
             )
         else:
             assert set(df.columns) == set(cols), (df.columns, cols)
             paths = self._write_files(self._keys_of(df, cols), dest, "eq-delete", single_file)
-        files = [_file_entry(p, "eq-delete", equality_ids=ids) for p in paths]
+            files = [_file_entry(p, "eq-delete", equality_ids=ids) for p in paths]
         return self._commit("delete-equality", files, equality_ids=ids)
 
     def merge(self, source: DataFrame, on_ids: list[int] | None = None) -> dict:
@@ -1888,11 +1918,10 @@ class MoRTable:
             groups = sorted(by_need.items(), key=lambda kv: sorted(kv[0]))
 
         paths = sorted(_canon_path(f["path"]) for f in data)
-        verbatim = all(_URI_VERBATIM.fullmatch(p) for p in paths)
 
         def pos_needed(f: dict) -> bool:
             b = (f.get("stats") or {}).get("file_path")
-            if b is None or not verbatim:
+            if b is None:
                 return True
             i = bisect.bisect_left(paths, b[0])
             return i < len(paths) and paths[i] <= b[1]
@@ -1966,18 +1995,26 @@ class MoRTable:
             return self._empty(keep_meta)
         schema = self.schema.to_spark()
         cols = [f.name for f in self.schema.fields]
+        # ``__file`` is the plain path metadata and position deletes name
+        # (``_canon_path``).  Spark renders ``_metadata.file_path`` as a
+        # ``file:`` URI, percent-encoded where the path holds a space,
+        # ``%`` or another character a URI path cannot carry; only a
+        # rendering with a ``%`` needs decoding, which must keep ``+``
+        # (literal in a URI path, a space to ``url_decode``).
+        uri = F.col("_metadata.file_path")
+        file = F.regexp_replace(
+            F.when(
+                uri.contains("%"), F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
+            ).otherwise(uri),
+            "^file:(//)?",
+            "",
+        )
 
         def _read(paths: list[str]) -> DataFrame:
             return (
                 self.spark.read.schema(schema)
                 .parquet(*paths)
-                .select(
-                    *cols,
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
+                .select(*cols, file.alias("__file"), F.col("_metadata.row_index").alias("__pos"))
             )
 
         parts = []

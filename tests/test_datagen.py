@@ -2430,3 +2430,140 @@ def test_metadata_only_mutators_roll_back_on_failed_save(spark, tmp_path):
     t._io.save = real_save
     t.fast_forward("b")
     assert t.scan().count() == 13
+
+
+# -- one write job per phase --------------------------------------------------
+
+
+def test_prepare_writes_each_phase_in_one_spark_job(spark, tmp_path):
+    """The batches of a phase are the tasks of ONE write job, so a
+    reference-shaped prepare() runs three Spark jobs, not one per file,
+    and data file i still holds batch i's rows in order."""
+    import pyarrow.parquet as pq
+
+    app = IcebergDataGeneratorApp(spark, make_config(tmp_path))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    summary = app.prepare()
+    assert dag.nextJobId() - before == 3
+    assert summary["derived_total"] == 100
+    snaps = app.catalog.load_table("ns1", "t1").snapshots()
+    assert [len(s["files"]) for s in snaps] == [5, 2, 2]
+    for i, f in enumerate(snaps[0]["files"]):
+        assert pq.read_table(f["path"]).column("bar").to_pylist() == list(
+            range(i * 100, (i + 1) * 100)
+        )
+
+
+def test_batch_write_restores_union_partitioning_conf(spark, tmp_path):
+    """The write turns ``spark.sql.unionOutputPartitioning`` off only for
+    its own duration: a pre-set value and an unset one both read back
+    unchanged."""
+    key = "spark.sql.unionOutputPartitioning"
+    t = _mk_table(spark, tmp_path, "conf")
+    try:
+        spark.conf.set(key, "true")
+        t.append_batches([_fix_rows_dg(spark, 0, 5), _fix_rows_dg(spark, 5, 10)])
+        assert spark.conf.get(key, None) == "true"
+        spark.conf.unset(key)
+        t.append_batches([_fix_rows_dg(spark, 10, 15), _fix_rows_dg(spark, 15, 20)])
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.unset(key)
+    assert t.scan().count() == 20
+
+
+def test_concurrent_batch_writes_keep_layout_and_conf(spark, tmp_path):
+    """Batch writes from more threads than cores on one session: each
+    keeps one file per batch, and the session's conf ends as it began —
+    a writer restoring the conf under another's write would break both."""
+    import sys
+    import threading
+
+    key = "spark.sql.unionOutputPartitioning"
+    tables = [_mk_table(spark, tmp_path, f"conc{i}") for i in range(6)]
+    errors = []
+
+    def write(t):
+        try:
+            for r in range(2):
+                snap = t.append_batches(
+                    [_fix_rows_dg(spark, r * 20, r * 20 + 10), _fix_rows_dg(spark, r * 20 + 10, r * 20 + 20)]
+                )
+                assert [f["record_count"] for f in snap["files"]] == [10, 10]
+        except BaseException as e:  # surfaced in the main thread below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    spark.conf.set(key, "true")
+    try:
+        threads = [threading.Thread(target=write, args=(t,)) for t in tables]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+        assert not any(th.is_alive() for th in threads)
+        assert spark.conf.get(key, None) == "true"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.unset(key)
+    assert not errors, errors
+    assert all(t.scan().count() == 40 for t in tables)
+
+
+def test_empty_batch_commits_no_file(spark, tmp_path):
+    """An empty batch writes no file (Iceberg writers skip empty files),
+    wherever it sits among the batches; the others keep their rows."""
+    t = _mk_table(spark, tmp_path, "emptyb")
+    snap = t.append_batches(
+        [_fix_rows_dg(spark, 0, 10), _fix_rows_dg(spark, 10, 10), _fix_rows_dg(spark, 10, 30)]
+    )
+    assert [f["record_count"] for f in snap["files"]] == [10, 20]
+    snap = t.append_batches([_fix_rows_dg(spark, 30, 30), _fix_rows_dg(spark, 30, 35)])
+    assert [f["record_count"] for f in snap["files"]] == [5]
+    assert sorted(r.bar for r in t.scan().collect()) == list(range(35))
+
+
+def test_position_delete_files_are_sorted_by_path_and_pos(spark, tmp_path):
+    """Each position-delete file is sorted by (file_path, pos), as the
+    Iceberg spec requires, even when its rows arrive out of path order —
+    a batch that spans several data files lists them in commit order,
+    and data file names are random."""
+    from functools import reduce
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    t = _mk_table(spark, tmp_path, "possort")
+    snap = t.append_batches([_fix_rows_dg(spark, i * 100, (i + 1) * 100) for i in range(4)])
+    paths = sorted((f["path"] for f in snap["files"]), reverse=True)
+
+    def spans(ps):
+        return reduce(
+            DataFrame.unionAll,
+            [spark.range(30).select(F.lit(p).alias("file_path"), F.col("id").alias("pos")) for p in ps],
+        )
+
+    t.add_position_deletes([spans(paths[:3]), spans(paths[3:])])
+    t.add_position_deletes(spans(paths[1:]))
+    files = [f for s in t.snapshots()[1:] for f in s["files"]]
+    assert len(files) == 3
+    for f in files:
+        rows = [(r["file_path"], r["pos"]) for r in pq.read_table(f["path"]).to_pylist()]
+        assert rows == sorted(rows), f["path"]
+    assert t.scan().count() == 400 - 4 * 30
+
+
+def test_prepare_under_percent_encoded_warehouse_path(spark, tmp_path):
+    """Spark renders a data file's path as a percent-encoded URI where the
+    path holds a space or ``%``; position deletes name the plain path, so
+    the scan must compare both in one form or it silently drops them."""
+    d, p, e = (5, 100), (2, 100), (2, 100)
+    app, table, summary = run_prepare(spark, tmp_path / "a b%41+c", d, p, e)
+    assert summary["derived_total"] == summary["measured_total"] == 100
+    check_invariants(spark, table, d, p, e)
+    # bounds pruning holds for such paths too: a scan of the surviving
+    # file's rows keeps no position-delete file
+    assert table.plan_report({"bar": (450, 460)})["surviving_pos_delete_files"] == 0
